@@ -308,13 +308,9 @@ class MinHashIndex:
         )
         if self.docs.current_snapshot_id() is not None:
             old_docs = self.docs.read(spark).join(old_needed, on=id_col, how="leftsemi")
-            # persist the verification shingle stream: jaccard_pairs folds it
-            # into per-doc arrays whose two join sides would otherwise re-run
-            # the old-docs side — docs read + semi-join + re-shingle — per
-            # consumer (sh_new alone is already cached; the union was not)
-            sh_ver = tracked_persist(
-                sh_new.unionByName(shingles(old_docs, id_col, text_col, p["k"]))
-            )
+            # read once: jaccard_pairs persists its per-doc array fold, which
+            # feeds both join sides
+            sh_ver = sh_new.unionByName(shingles(old_docs, id_col, text_col, p["k"]))
         else:
             sh_ver = sh_new
         new_pairs = jaccard_pairs(cand, sh_ver, id_col, p["threshold"])

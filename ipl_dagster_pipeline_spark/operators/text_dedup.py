@@ -199,7 +199,17 @@ def lsh_candidates(
 def jaccard_pairs(
     cand: DataFrame, sh: DataFrame, id_col: str = "doc_id", threshold: float = 0.5
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs: |A∩B| / (|A|+|B|-|A∩B|)."""
+    """Exact n-gram Jaccard for candidate pairs: |A∩B| / (|A|+|B|-|A∩B|).
+
+    ``threshold`` must be > 0: at or below 0 every candidate pair, including
+    pairs that share no shingle, would pass.
+
+    Precondition: ``sh`` holds each ``(id_col, s)`` row at most once — the
+    per-doc array sizes are |A| and |B| only then.  :func:`shingles` emits
+    distinct rows, and a ``sh`` built as a union of shingle frames must take
+    each doc id from one input only (id-disjoint unions)."""
+    if not threshold > 0:
+        raise ValueError(f"jaccard threshold must be > 0, got {threshold}")
     return (
         _jaccard(cand, sh, id_col)
         .filter(F.col("jaccard") >= threshold)

@@ -272,6 +272,57 @@ def test_driver_contract_consistency():
         "emb_lsh_topk", "emb_ivf_topk", "emb_ann_parity"
     }
     assert len(all_qs) == 133 and len(all_oracles) == 130
+    # golden digest over the whole contract: catalog order, each entry's
+    # function and oracle text, and the gate's query and oracle key order
+    import hashlib
+    import json
+
+    def _sha(s):
+        return hashlib.sha256(s.encode()).hexdigest()
+
+    contract = {
+        "catalog": [
+            [name, fn.__name__, _sha(all_oracles[name]) if name in all_oracles else None]
+            for name, fn in all_qs.items()
+        ],
+        "gate": list(qs),
+        "gate_oracles": list(oracles),
+    }
+    digest = _sha(json.dumps(contract, separators=(",", ":")))
+    assert digest == "2598c74ffc66a594b26240c80e30bd3fba9ac165b488a3fa174f312f90459e02", digest
+
+
+def test_driver_module_binds_each_name_once():
+    """The driver module is one flat catalog: every top-level name is bound
+    exactly once (no accessor redefinition chains) and every import sits
+    above the first top-level ``def``."""
+    import ast
+    import collections
+    import pathlib
+
+    tree = ast.parse(pathlib.Path("__spark_entry__.py").read_text())
+    bound = collections.Counter()
+    first_def = None
+    late_imports = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            bound[node.name] += 1
+            if first_def is None:
+                first_def = node.lineno
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            if first_def is not None:
+                late_imports.append(node.lineno)
+            for a in node.names:
+                bound[a.asname or a.name.split(".")[0]] += 1
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        bound[n.id] += 1
+    rebound = sorted(n for n, c in bound.items() if c > 1)
+    assert rebound == [], rebound
+    assert late_imports == [], f"imports after the first def at lines {late_imports}"
 
 
 def test_no_per_row_python_udfs():

@@ -48,6 +48,10 @@ def test_minhash_finds_near_dups_and_respects_threshold(docs):
     pairs = minhash_lsh_dedup(docs, threshold=0.5).toPandas()
     assert len(pairs) > 0, "sf0.001 documents contain mutated copies"
     assert (pairs["jaccard"] >= 0.5).all()
+    # a threshold at or below 0 would keep pairs that share no shingle
+    for bad in (0.0, -0.1):
+        with pytest.raises(ValueError, match="threshold must be > 0"):
+            minhash_lsh_dedup(docs, threshold=bad)
 
 
 def test_minhash_finds_planted_mutation(spark, docs):
