@@ -37,6 +37,8 @@ class SnapshotTable:
     def __init__(self, root: str) -> None:
         self.root = root
         self.manifest_dir = os.path.join(root, "_manifests")
+        # at the root, not in _manifests/: every *.json there is a snapshot
+        self._sidecar = os.path.join(root, "_committed.json")
         os.makedirs(self.manifest_dir, exist_ok=True)
 
     # -- write ----------------------------------------------------------
@@ -54,7 +56,7 @@ class SnapshotTable:
         previous snapshot current (readers never see partial data).
         ``meta`` (JSON-serializable) is recorded in the manifest — callers use
         it for idempotence tags (e.g. a batch id: skip a batch whose tag is
-        already committed, the Iceberg ``wap.id`` pattern).
+        already in ``committed()``, the Iceberg ``wap.id`` pattern).
         """
         snap_id = self._next_snapshot_id()
         data_dir = os.path.join(self.root, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}")
@@ -122,6 +124,23 @@ class SnapshotTable:
         """All committed manifests, oldest → newest."""
         return [self._manifest(int(m.split(".")[0])) for m in self._manifests()]
 
+    def committed(self, key: str) -> set[str]:
+        """Every string tag ever committed under ``meta[key]`` (list values
+        flattened): live manifests plus the tags ``expire_snapshots`` folded
+        into the ``_committed.json`` sidecar.  The one "already applied?"
+        answer for idempotent writers — the tag lands with the data it
+        describes, in the same atomic manifest rename."""
+        tags = set().union(*(_tags(m.get("meta", {}), key) for m in self.snapshots()))
+        # read the sidecar AFTER the manifests: expiration writes it before
+        # deleting them, so a tag moving between the two is never missed
+        return tags | set(self._folded().get(key, []))
+
+    def _folded(self) -> dict[str, list[str]]:
+        if not os.path.exists(self._sidecar):
+            return {}
+        with open(self._sidecar) as fh:
+            return json.load(fh)
+
     # -- maintenance ----------------------------------------------------
 
     def expire_snapshots(self, keep_last: int = 3) -> dict:
@@ -133,8 +152,9 @@ class SnapshotTable:
         (the Iceberg ``expireSnapshots`` analog).  Reads of every KEPT
         snapshot are byte-identical before and after: an old overwrite base
         that a kept append chain walks through is retained even when it falls
-        outside the keep window.  Returns ``{"expired_manifests": n,
-        "deleted_dirs": m}``.
+        outside the keep window.  The expired manifests' ``meta`` tags are
+        kept in the sidecar, so ``committed()`` never forgets a tag.
+        Returns ``{"expired_manifests": n, "deleted_dirs": m}``.
         """
         import shutil
 
@@ -152,6 +172,18 @@ class SnapshotTable:
                 needed_dirs.add(m["data_dir"])
                 cur = m.get("parent") if m.get("mode", "overwrite") == "append" else None
         expired = [s for s in snaps if s not in needed_ids]
+        if expired:
+            # fold the expired manifests' tags into the sidecar first, so
+            # committed() survives the deletes (tmp+rename, like a commit)
+            folded = {k: set(v) for k, v in self._folded().items()}
+            for s in expired:
+                meta = self._manifest(s).get("meta", {})
+                for k in meta:
+                    folded.setdefault(k, set()).update(_tags(meta, k))
+            tmp = self._sidecar + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump({k: sorted(v) for k, v in folded.items() if v}, fh)
+            os.replace(tmp, self._sidecar)
         for s in expired:
             os.remove(os.path.join(self.manifest_dir, f"{s:012d}.json"))
         deleted = 0
@@ -203,6 +235,11 @@ class SnapshotTable:
         if any(m.get("mode", "overwrite") != "append" for m in manifests):
             return self.read(spark)
         return spark.read.parquet(*[m["data_dir"] for m in manifests])
+
+
+def _tags(meta: dict, key: str) -> set[str]:
+    v = meta.get(key)
+    return {t for t in (v if isinstance(v, list) else [v]) if isinstance(t, str)}
 
 
 def write_day_partitioned(df: DataFrame, path: str, ts_col: str = "ts", mode: str = "overwrite") -> None:

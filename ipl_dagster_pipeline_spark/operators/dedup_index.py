@@ -30,10 +30,12 @@ recompute would drop the bucket wholesale.  Dropped probe rows stay
 observable (``metrics.observed_metrics('incr_lsh_dropped')``).
 
 Resume/idempotence: each ``add_batch`` tags its three commits with
-``batch_id`` (manifest ``meta`` — the Iceberg wap.id pattern).  Re-running a
-batch skips tables that already committed it, so a crash between commits
-resumes instead of double-appending; the ``docs`` commit lands LAST and is
-the batch-done marker.
+``batch_id`` (manifest ``meta`` — the Iceberg wap.id pattern), and
+``SnapshotTable.committed("batch_id")`` is the only record of what has been
+applied: the tag lands in the same atomic manifest rename as the data, and
+snapshot expiration keeps it.  Re-running a batch skips tables that already
+committed it, so a crash between commits resumes instead of double-appending;
+the ``docs`` commit lands LAST and is the batch-done marker.
 
 Scale shape: the probe is an equi shuffle join on (band, bucket) with the
 union-size cap riding the same shuffle as a count window; signatures are one
@@ -113,26 +115,6 @@ class MinHashIndex:
 
     # -- helpers --------------------------------------------------------
 
-    def _registry_file(self) -> str:
-        return os.path.join(self.root, "_batches.json")
-
-    def _registry(self) -> dict[str, list[str]]:
-        """Batch ids whose manifests were folded away by maintain() —
-        idempotence must survive snapshot expiration (round-5 ADVICE)."""
-        if os.path.exists(self._registry_file()):
-            with open(self._registry_file()) as fh:
-                return json.load(fh)
-        return {}
-
-    def _committed_batches(self, name: str, table: SnapshotTable) -> set[str]:
-        """Union of live-manifest batch tags and the durable registry."""
-        live = {
-            m.get("meta", {}).get("batch_id")
-            for m in table.snapshots()
-            if m.get("meta", {}).get("batch_id")
-        }
-        return live | set(self._registry().get(name, []))
-
     def _batch_snapshot_df(self, spark: SparkSession, table: SnapshotTable, batch_id: str) -> DataFrame:
         for m in table.snapshots():
             if m.get("meta", {}).get("batch_id") == batch_id:
@@ -193,7 +175,7 @@ class MinHashIndex:
         spark = batch.sparkSession
         p = self.params
         id_col, text_col = p["id_col"], p["text_col"]
-        if batch_id in self._committed_batches("docs", self.docs):  # docs commit = batch-done marker
+        if batch_id in self.docs.committed("batch_id"):  # docs commit = batch-done marker
             try:
                 return self._batch_snapshot_df(spark, self.pairs, batch_id)
             except KeyError:
@@ -316,18 +298,18 @@ class MinHashIndex:
         new_pairs = jaccard_pairs(cand, sh_ver, id_col, p["threshold"])
 
         meta = {"batch_id": batch_id}
-        if batch_id not in self._committed_batches("pairs", self.pairs):
+        if batch_id not in self.pairs.committed("batch_id"):
             self.pairs.commit(new_pairs, mode="append", meta=meta)
-        if batch_id not in self._committed_batches("bands", self.bands):
+        if batch_id not in self.bands.committed("batch_id"):
             self.bands.commit(bands_new.drop("__new"), mode="append", meta=meta)
-        if batch_id not in self._committed_batches("docs", self.docs):
+        if batch_id not in self.docs.committed("batch_id"):
             self.docs.commit(docs_to_commit, mode="append", meta=meta)
         try:
             return self._batch_snapshot_df(spark, self.pairs, batch_id)
         except KeyError:
-            # partial-commit crash + maintain() folded this batch's pairs tag
-            # into the registry before the retry: the pairs live on in
-            # all_pairs, the per-batch delta is gone — empty delta, not a raise
+            # partial-commit crash + maintain() expired this batch's pairs
+            # manifest before the retry: the pairs live on in all_pairs, the
+            # per-batch delta is gone — empty delta, not a raise
             return self.pairs.read(spark).limit(0)
 
     # -- reads ----------------------------------------------------------
@@ -347,28 +329,10 @@ class MinHashIndex:
         """Periodic housekeeping: compact each table's append chain into one
         balanced overwrite snapshot, then expire pre-compaction history.
 
-        Before expiring, every live manifest's ``batch_id`` tag is folded
-        into the durable ``_batches.json`` registry at the index root, so
-        ``add_batch`` idempotence survives manifest expiration — a scheduler
-        retry of an old batch after maintenance stays a no-op instead of
-        silently double-appending (round-5 ADVICE).  The registry is written
-        tmp+rename (same atomic-publish discipline as the manifests).
+        Expiration keeps the expired manifests' ``batch_id`` tags in each
+        table's ``committed()`` sidecar, so a scheduler retry of an old batch
+        after maintenance stays a no-op instead of silently double-appending.
         """
-        reg = self._registry()
-        for name, tbl in (("docs", self.docs), ("bands", self.bands), ("pairs", self.pairs)):
-            tagged = {
-                m.get("meta", {}).get("batch_id")
-                for m in tbl.snapshots()
-                if m.get("meta", {}).get("batch_id")
-            }
-            merged = sorted(set(reg.get(name, [])) | tagged)
-            if merged:
-                reg[name] = merged
-        tmp = self._registry_file() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(reg, fh)
-        os.replace(tmp, self._registry_file())
-
         out = {}
         for name, tbl in (("docs", self.docs), ("bands", self.bands), ("pairs", self.pairs)):
             if tbl.current_snapshot_id() is None:

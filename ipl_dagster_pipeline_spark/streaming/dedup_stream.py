@@ -1,19 +1,19 @@
 """Streaming near-dup indexing: MinHash/LSH index maintenance per micro-batch.
 
 The batch path (``jobs/dedup_index_update.py``) indexes a daily batch per
-run; here arriving document files drive the same index continuously:
+run; here arriving document files drive the same index through the shared
+micro-batch driver (``streaming.run_micro_batches``):
 
-* a file-source stream with checkpointed offsets assigns every arriving
-  file to exactly one micro-batch across restarts;
-* each micro-batch becomes one ``MinHashIndex.add_batch`` call whose
-  ``batch_id`` is the STREAM's batch id — and since ``add_batch`` is
-  idempotent per batch id (the docs commit is the batch-done marker), a
-  micro-batch replayed after a crash re-probes and converges to the same
-  committed state instead of double-appending: exactly-once effect from
-  at-least-once delivery;
-* optional periodic maintenance (compaction + snapshot expiration) runs
-  inside the same serialized foreachBatch loop, so it never races a probe;
-* ``trigger(availableNow=True)`` turns the same query into a catch-up run.
+* each micro-batch becomes one ``MinHashIndex.add_batch`` call tagged
+  ``stream-<sha1 of its sorted input files>``.  ``add_batch`` is idempotent
+  per tag (the docs commit is the batch-done marker), so a batch replayed
+  after a crash — same checkpoint, same files, same tag — is skipped:
+  exactly-once per input-file set from at-least-once delivery;
+* a lost checkpoint re-delivers files in a new composition and so under a
+  new tag; docs that are already indexed are dropped by ``add_batch``'s
+  duplicate-id guard, and genuinely new files are indexed once;
+* catch-up runs end, so ``index.maintain()`` runs between them and never
+  races a probe.
 
 Per-batch cost: O(batch + matched-neighborhood) — see
 ``operators/dedup_index.py``.  Reference parity: the reference's per-minute
@@ -23,10 +23,14 @@ recompute; this bounds it by arrival and pays batch-sized work.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.dedup_index import MinHashIndex
+from . import run_micro_batches
 
 
 def stream_dedup_index(
@@ -34,10 +38,7 @@ def stream_dedup_index(
     input_dir: str,
     index: MinHashIndex,
     checkpoint_path: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    maintain_every: int | None = None,
-    maintain_keep_last: int = 3,
     schema: StructType | None = None,
 ):
     """Start (or catch up) the streaming dedup-index maintenance query.
@@ -62,30 +63,11 @@ def stream_dedup_index(
         if col not in schema.fieldNames():
             raise ValueError(f"stream input lacks index column {col!r}")
 
-    def _apply(batch_df, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        # tag scoped to the checkpoint GENERATION (round-6 ADVICE): a fresh
-        # or lost checkpoint renumbers batches from 0 with different
-        # contents, and an unscoped "stream-0" tag from the old lineage
-        # would silently skip them.  With the generation in the tag the new
-        # lineage's batches are processed; docs already indexed are dropped
-        # by add_batch's duplicate-id guard, so re-delivery stays correct.
-        from . import checkpoint_generation
+    def _apply(batch_df) -> None:
+        files = sorted(r[0] for r in batch_df.select(F.input_file_name()).distinct().collect())
+        tag = hashlib.sha1("\n".join(files).encode()).hexdigest()
+        index.add_batch(batch_df, batch_id=f"stream-{tag}")
 
-        gen = checkpoint_generation(checkpoint_path)
-        index.add_batch(batch_df, batch_id=f"stream-{gen}-{batch_id}")
-        if maintain_every and batch_id > 0 and batch_id % maintain_every == 0:
-            index.maintain(spark, keep_last=maintain_keep_last)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
+    return run_micro_batches(
+        spark, input_dir, _apply, checkpoint_path, schema, max_files_per_trigger
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

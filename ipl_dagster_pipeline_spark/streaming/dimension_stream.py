@@ -5,17 +5,16 @@ a cron cadence (sharing.py:142-149 — 1 run/min); freshness is bounded by
 the cadence and every run pays the full table.  Here arriving change files
 drive the maintenance instead:
 
-* a file-source stream with checkpointed offsets processes every change
-  file EXACTLY ONCE across restarts;
+* the shared micro-batch driver (``streaming.run_micro_batches``) hands
+  every change file to one micro-batch;
 * each micro-batch is reduced to its latest change per key (window over the
   BATCH, bounded by batch size), then merged into the current committed
   snapshot with :func:`operators.dimensions.merge_upsert` — updates win,
   unmatched keys insert, flagged rows delete;
 * the result is committed atomically through ``io.SnapshotTable`` —
   readers only ever see a committed snapshot, and a batch replayed after a
-  crash re-merges the same changes onto the same ancestor, converging to
-  identical content (idempotent by the merge semantics);
-* ``trigger(availableNow=True)`` turns the same query into a catch-up run.
+  crash re-merges the same changes, converging to identical content
+  (idempotent by the merge semantics, so no commit tag is needed).
 
 Per-batch cost: |batch| + |current dimension| (one merge shuffle on the
 key) — never fact-table-sized.
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..io import SnapshotTable
 from ..operators.dimensions import merge_upsert
+from . import run_micro_batches
 
 
 def stream_dimension_upsert(
@@ -38,7 +38,6 @@ def stream_dimension_upsert(
     order_col: str,
     checkpoint_path: str,
     delete_col: str | None = None,
-    available_now: bool = True,
 ):
     """Start (or catch up) the streaming dimension-maintenance query.
 
@@ -51,11 +50,9 @@ def stream_dimension_upsert(
     tbl = SnapshotTable(table_path)
     snap_cols = [c for c in schema.fieldNames() if c != delete_col]
 
-    def _apply(batch_df, batch_id: int) -> None:
+    def _apply(batch_df) -> None:
         from pyspark.sql import Window
 
-        if not batch_df.head(1):
-            return
         w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
         latest = (
             batch_df.withColumn("__rn", F.row_number().over(w))
@@ -68,12 +65,4 @@ def stream_dimension_upsert(
             cur = batch_df.select(*snap_cols).limit(0)
         tbl.commit(merge_upsert(cur, latest, key_cols, order_col=order_col, delete_col=delete_col))
 
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_micro_batches(spark, input_dir, _apply, checkpoint_path, schema)

@@ -5,13 +5,14 @@ to ``plans.incremental``.
 when NEW SNAPSHOTS are committed; this module does the same when NEW FILES
 LAND, driven by a file-source stream:
 
-* the stream's checkpointed source offsets make every file processed EXACTLY
-  ONCE across restarts (the streaming analog of the snapshot-id watermark);
+* the shared micro-batch driver (``streaming.run_micro_batches``) hands
+  every file to one micro-batch (the streaming analog of the snapshot-id
+  watermark), reading with the DECLARED transcript schema;
 * each micro-batch finds the conv buckets its rows touch and rebuilds ONLY
   those buckets from full history, publishing with writer-pinned dynamic
-  partition overwrite — idempotent, so a batch replayed after a crash
-  converges to the same table;
-* ``trigger(availableNow=True)`` turns the same query into a catch-up run.
+  partition overwrite — idempotent, so a batch replayed after a crash or
+  re-delivered after a lost checkpoint converges to the same table
+  (exactly-once effect per input-file set, with no tag needed).
 
 At 100 TB each micro-batch costs |touched buckets| × bucket-size, not the
 table — identical math to the batch path, with arrival-driven scheduling.
@@ -24,7 +25,8 @@ from pyspark.sql import functions as F
 
 from ..plans.features import build_turn_features
 from ..plans.incremental import DEFAULT_BUCKETS, conv_bucket
-from .session_stream import stream_transcripts
+from ..schema import TRANSCRIPT_SCHEMA
+from . import run_micro_batches
 
 
 def stream_incremental_features(
@@ -35,7 +37,6 @@ def stream_incremental_features(
     checkpoint_path: str,
     gap_seconds: int = 1800,
     n_buckets: int = DEFAULT_BUCKETS,
-    available_now: bool = True,
 ):
     """Start (or catch up) the streaming bucket-rebuild maintenance query.
 
@@ -45,7 +46,7 @@ def stream_incremental_features(
     feature build, exactly like the batch incremental path.
     """
 
-    def _rebuild(batch_df: DataFrame, batch_id: int) -> None:
+    def _rebuild(batch_df: DataFrame) -> None:
         touched = (
             batch_df.select(conv_bucket(F.col("conv_id"), n_buckets).alias("conv_bucket"))
             .distinct()
@@ -63,11 +64,4 @@ def stream_incremental_features(
             .parquet(features_path)
         )
 
-    writer = (
-        stream_transcripts(spark, input_dir)
-        .writeStream.foreachBatch(_rebuild)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_micro_batches(spark, input_dir, _rebuild, checkpoint_path, TRANSCRIPT_SCHEMA)

@@ -10,25 +10,26 @@ never data-sized).
 
 Unlike the SCD1 stream (whose merge is naturally idempotent), a COUNT merge
 replayed after a crash would double-count — and unlike the dedup index,
-there is no content-level guard to fall back on.  Exactly-once is therefore
-carried at the FILE level (round-6 ADVICE): every input file that has been
-merged is recorded in a durable registry, each micro-batch merges only rows
-from files not yet recorded, and the registry commit follows the snapshot
-commit.  This is robust to checkpoint loss in BOTH directions — a fresh
-checkpoint that re-delivers all files in one batch neither double-counts
-(their files are registered) nor suppresses genuinely new files (they are
-not), which a raw ``b{batch_id}`` tag got wrong.  Reference precedent for
-skip-if-done keyed on the artifact, not the attempt: the If-Modified-Since
-fetch discipline (util/urllib.py:59-72).
+there is no content-level guard to fall back on.  Exactly-once per input
+file is therefore carried by the sketch table itself: each commit records
+the files it merged as ``meta={"files": [...]}``, in the same atomic
+manifest rename as the merged sketch, and each micro-batch merges only rows
+whose file is not in ``SnapshotTable.committed("files")`` (a broadcast
+anti-join).  A crash after the commit replays a batch whose files are all
+recorded; a lost checkpoint that re-delivers every file in one batch
+neither double-counts history nor skips the genuinely new files.
+Reference precedent for skip-if-done keyed on the artifact, not the
+attempt: the If-Modified-Since fetch discipline (util/urllib.py:59-72).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for parity with sibling modules)
+from pyspark.sql import functions as F
 
 from ..io import SnapshotTable
 from ..operators.sketches import loghist_merge, loghist_sketch
+from . import run_micro_batches
 
 
 def stream_sketch_maintenance(
@@ -39,7 +40,6 @@ def stream_sketch_maintenance(
     group_cols: list[str] | None,
     checkpoint_path: str,
     schema=None,
-    available_now: bool = True,
     maintain_every: int = 20,
     keep_last: int = 3,
 ):
@@ -51,61 +51,28 @@ def stream_sketch_maintenance(
     explicitly so the query can start on a fresh deployment before the
     first input file lands (round-5 ADVICE on the dedup stream).
 
-    Housekeeping: merged input files go to a durable ``_stream_files``
-    registry (not only snapshot meta), and every ``maintain_every``
-    commits old snapshots are expired (``keep_last`` retained) — a
-    long-running stream stays O(keep_last) on disk instead of one full
-    sketch copy per batch, and file-based replay skipping survives the
-    expiration (the dedup-index registry discipline, round-5 ADVICE).
-    The registry grows with the input FILE count — the same growth rate as
-    the stream's own checkpoint file log.
+    Housekeeping: every ``maintain_every`` commits old snapshots are expired
+    (``keep_last`` retained) — a long-running stream stays O(keep_last) on
+    disk instead of one full sketch copy per batch.  Expiration keeps the
+    ``files`` tags, so replay skipping survives it; the tag set grows with
+    the input FILE count, the growth rate of the stream's own checkpoint
+    file log.
     """
-    import json
-    import os
-
-    schema = schema or spark.read.parquet(input_dir).schema
     tbl = SnapshotTable(table_path)
-    registry = os.path.join(table_path, "_stream_files.json")
 
-    def _merged_files() -> set:
-        if os.path.exists(registry):
-            with open(registry) as fh:
-                return set(json.load(fh))
-        return set()
-
-    def _record(files: set) -> None:
-        t = registry + ".tmp"
-        with open(t, "w") as fh:
-            json.dump(sorted(files), fh)
-        os.replace(t, registry)
-
-    def _apply(batch_df, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        seen = _merged_files()
-        files = {r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()}
-        new_files = sorted(files - seen)
+    def _apply(batch_df) -> None:
+        merged = spark.createDataFrame([(f,) for f in tbl.committed("files")], "__file string")
+        fresh = batch_df.withColumn("__file", F.input_file_name()).join(
+            F.broadcast(merged), "__file", "left_anti"
+        )
+        new_files = sorted(r[0] for r in fresh.select("__file").distinct().collect())
         if not new_files:  # crash replay / re-delivered lineage: no double count
             return
-        fresh = (
-            batch_df
-            if len(new_files) == len(files)
-            else batch_df.where(F.input_file_name().isin(new_files))
-        )
-        delta = loghist_sketch(fresh, value_col, group_cols)
+        delta = loghist_sketch(fresh.drop("__file"), value_col, group_cols)
         if tbl.current_snapshot_id() is not None:
             delta = loghist_merge(tbl.read(spark), delta)
-        tbl.commit(delta, meta={"stream_batch_id": f"b{batch_id}", "n_files": len(new_files)})
-        _record(seen | set(new_files))
+        tbl.commit(delta, meta={"files": new_files})
         if maintain_every and len(tbl.snapshots()) >= maintain_every:
             tbl.expire_snapshots(keep_last=keep_last)
 
-    writer = (
-        spark.readStream.schema(schema)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_micro_batches(spark, input_dir, _apply, checkpoint_path, schema)

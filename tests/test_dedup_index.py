@@ -152,7 +152,7 @@ def test_probe_is_delta_filtered_not_index_wide(spark, docs, tmp_path):
 def test_replay_after_maintain_is_still_idempotent(spark, docs, tmp_path):
     """Round-5 ADVICE (medium): maintain() expires the manifests carrying
     batch_id tags; a scheduler retry of an old batch afterwards must remain
-    a no-op (durable _batches.json registry), returning an empty delta —
+    a no-op (expiration keeps the tags in committed()), returning an empty delta —
     never a double-append."""
     idx = MinHashIndex(str(tmp_path / "idx"))
     b1 = docs.filter(F.col("doc_id") < 150)
@@ -162,7 +162,7 @@ def test_replay_after_maintain_is_still_idempotent(spark, docs, tmp_path):
     n_docs = idx.docs.read(spark).count()
     n_bands = idx.bands.read(spark).count()
     idx.maintain(spark, keep_last=1, target_files=2)
-    # the batch tags are gone from live manifests but held by the registry
+    # the batch tags are gone from live manifests but held by the sidecar
     assert not any(m["meta"].get("batch_id") == "b1" for m in idx.docs.snapshots())
     replay = idx.add_batch(b1, batch_id="b1")
     assert replay.count() == 0  # attribution folded away -> empty delta

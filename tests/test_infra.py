@@ -98,9 +98,9 @@ def test_snapshot_expiration_keeps_reachable_chain(spark, tmp_path):
     import pytest
 
     tbl = SnapshotTable(str(tmp_path / "t"))
-    s1 = tbl.commit(spark.range(5).toDF("id"))                      # overwrite (dead base)
+    s1 = tbl.commit(spark.range(5).toDF("id"), meta={"files": ["f1", "f2"]})  # dead base
     s2 = tbl.commit(spark.range(10).toDF("id"))                     # overwrite (live base)
-    s3 = tbl.commit(spark.range(10, 12).toDF("id"), mode="append")  # append on s2
+    s3 = tbl.commit(spark.range(10, 12).toDF("id"), mode="append", meta={"files": "f3"})
     before = sorted(r.id for r in tbl.read(spark).collect())
     stats = tbl.expire_snapshots(keep_last=1)  # keep s3 → s2 retained via chain
     assert stats["expired_manifests"] == 1 and stats["deleted_dirs"] == 1
@@ -108,6 +108,8 @@ def test_snapshot_expiration_keeps_reachable_chain(spark, tmp_path):
     assert sorted(r.id for r in tbl.read(spark, snapshot_id=s3).collect()) == before
     with pytest.raises(FileNotFoundError):
         tbl._manifest(s1)
+    # the expired manifest's tags are still committed (sidecar), lists flattened
+    assert tbl.committed("files") == {"f1", "f2", "f3"}
     # only the two referenced data dirs remain on disk
     dirs = [d for d in os.listdir(tbl.root) if d.startswith("snap-")]
     assert len(dirs) == 2

@@ -63,10 +63,13 @@ def test_stream_restart_continues_not_reindexes(spark, docs, tmp_path):
     assert n_docs_after_first < docs.count()
     assert _pairs_set(idx.all_pairs(spark)) == _pairs_set(minhash_lsh_dedup(docs, threshold=0.5))
 
-    # replaying a committed stream batch id by hand is a no-op (crash-replay)
+    # replaying a committed stream batch tag by hand is a no-op (crash-replay)
     before = idx.docs.read(spark).count()
-    idx.add_batch(docs.filter(F.col("doc_id") < 250), batch_id="stream-0")
+    n_pair_snaps = len(idx.pairs.snapshots())
+    tag = idx.docs.snapshots()[0]["meta"]["batch_id"]
+    idx.add_batch(docs.filter(F.col("doc_id") < 250), batch_id=tag)
     assert idx.docs.read(spark).count() == before
+    assert len(idx.pairs.snapshots()) == n_pair_snaps
 
 
 def test_stream_rejects_wrong_schema(spark, tmp_path):
@@ -108,8 +111,8 @@ def test_stream_dedup_fresh_checkpoint_still_indexes_new_files(spark, docs, tmp_
     """Round-6 ADVICE failure scenario: a lost checkpoint restarts batch
     numbering at 0, so an unscoped "stream-0" tag from the old lineage
     would silently skip the fresh lineage's first batch — including files
-    the index has never seen.  Generation-scoped tags process it; docs
-    already indexed are dropped by the duplicate-id guard."""
+    the index has never seen.  Tags derived from the batch's file set
+    process it; docs already indexed are dropped by the duplicate-id guard."""
     inp = str(tmp_path / "in")
     docs.filter(F.col("doc_id") < 250).coalesce(1).write.parquet(f"{inp}/f1")
     idx = MinHashIndex(str(tmp_path / "idx"))

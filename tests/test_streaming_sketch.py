@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from ipl_dagster_pipeline_spark.io import SnapshotTable
 from ipl_dagster_pipeline_spark.operators.sketches import loghist_quantiles, loghist_sketch
@@ -51,8 +52,9 @@ def test_streaming_sketch_matches_batch(spark, tmp_path):
 
 
 def test_streaming_sketch_replay_does_not_double_count(spark, tmp_path):
-    """A crash-replayed foreachBatch invocation must not double-count: the
-    batch-id tag skips it (sum-merge is NOT naturally idempotent)."""
+    """A crash-replayed foreachBatch invocation must not double-count: its
+    files are already in the committed ``files`` tags, so it is skipped
+    (sum-merge is NOT naturally idempotent)."""
     input_dir = str(tmp_path / "in")
     table = str(tmp_path / "sk")
     ck = str(tmp_path / "ck")
@@ -68,6 +70,35 @@ def test_streaming_sketch_replay_does_not_double_count(spark, tmp_path):
     ).awaitTermination()
     assert tbl.current_snapshot_id() == snap_before
     assert tbl.read(spark).agg(F.sum("cnt").alias("n")).collect()[0].n == before == 100
+
+
+def test_streaming_sketch_crash_after_commit_does_not_double_count(spark, tmp_path, monkeypatch):
+    """A crash right after the sketch commit, before the micro-batch is
+    marked done, replays that batch on the SAME checkpoint: the files it
+    merged are recorded in the same commit, so the replay merges nothing."""
+    input_dir = str(tmp_path / "in")
+    table = str(tmp_path / "sk")
+    ck = str(tmp_path / "ck")
+    spark.range(0, 100).select((F.col("id") / 9.0).alias("v")).write.parquet(input_dir)
+
+    real_commit = SnapshotTable.commit
+    crashed = []
+
+    def commit_then_crash(self, *args, **kwargs):
+        snap = real_commit(self, *args, **kwargs)
+        if not crashed:
+            crashed.append(snap)
+            raise RuntimeError("crash after commit")
+        return snap
+
+    monkeypatch.setattr(SnapshotTable, "commit", commit_then_crash)
+    q = stream_sketch_maintenance(spark, input_dir, table, "v", None, ck)
+    with pytest.raises(Exception, match="crash after commit"):
+        q.awaitTermination()
+
+    stream_sketch_maintenance(spark, input_dir, table, "v", None, ck).awaitTermination()
+    tbl = SnapshotTable(table)
+    assert tbl.read(spark).agg(F.sum("cnt").alias("n")).collect()[0].n == 100
 
 
 def test_streaming_sketch_starts_on_empty_dir_with_schema(spark, tmp_path):
